@@ -541,7 +541,7 @@ def _q_rfi_udf(spark, sf_dir):
 def _q_rfi_mwa_float(spark, sf_dir):
     """F9f: the CLI's PRODUCTION mwa-default path — the float UDF
     island with AOFlagger's own statistics (Winsorized-mode noise,
-    float Gaussian fit; rfi.flag_rfi_mwa impl='float'), measured at
+    float Gaussian fit; rfi.flag_rfi_mwa), measured at
     0.9837 agreement / 0.9195 recall against the reference's own cotter
     golden (tests/test_golden_mwa_flags.py). Deliberately rows-only
     like the other f64 UDF twins (c1b/f9b): float windowed statistics

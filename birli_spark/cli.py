@@ -74,7 +74,6 @@ class Context:
     dut1: float = 0.0
     rfi_sensitivity: float = 6.0
     rfi_strategy: str = "mwa"
-    rfi_impl: str = "float"
     no_draw_progress: bool = False
     rfi_iterative: bool = False
     sir_eta: float | None = None
@@ -197,13 +196,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "stderr (the reference's flag of the same "
                         "name; stage detail remains in the Spark UI "
                         "via job descriptions)")
-    p.add_argument("--rfi-impl", type=str, default="float",
-                   choices=("float", "ticks"),
-                   help="mwa-strategy arithmetic: 'float' (DEFAULT — "
-                        "AOFlagger's own statistics; measured 0.9837 "
-                        "agreement / 0.9195 recall vs the reference's "
-                        "cotter golden) or 'ticks' (the integer-tick "
-                        "mode that hash-matches the relational plan)")
     p.add_argument("--no-cable-delay", action="store_true")
     p.add_argument("--no-digital-gains", action="store_true")
     p.add_argument("--no-geometric-delay", action="store_true")
@@ -439,7 +431,6 @@ def parse_args(argv: list[str]) -> Context:
         rfi_strategy=(a.aoflagger_strategy
                       if a.aoflagger_strategy in ("mwa", "generic")
                       else "sumthreshold"),
-        rfi_impl=a.rfi_impl,
         no_draw_progress=a.no_draw_progress,
         rfi_iterative=a.rfi_iterative,
         sir_eta=a.sir_eta,
@@ -656,8 +647,7 @@ def build_baked(spark: SparkSession, ctx: Context) -> DataFrame:
             from birli_spark.operators import rfi
             vis = rfi.flag_rfi_mwa(
                 vis, base_sensitivity=ctx.rfi_sensitivity,
-                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2,
-                impl=ctx.rfi_impl)
+                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2)
         else:
             from birli_spark.operators import rfi
             vis = rfi.flag_rfi(vis, base_sensitivity=ctx.rfi_sensitivity,

@@ -94,20 +94,17 @@ def sumthreshold_mask(img: np.ndarray, base_sensitivity: float = 6.0,
     return (work & present) | prior
 
 
-def flag_rfi(vis: DataFrame, base_sensitivity: float = 6.0,
-             re_apply_existing: bool = True,
-             sir_eta: float | None = None) -> DataFrame:
-    """Detect RFI per baseline and OR it into ``flag``.
-
-    The per-baseline image is the Stokes-I amplitude
-    ``|(xx + yy)| / 2`` over (t, chan) — the same reduction AOFlagger's MWA
-    strategy feeds SumThreshold. ``re_apply_existing=True`` ORs with prior
-    flags (reference src/flags.rs:414-418); False overwrites.
-    ``sir_eta`` appends the SIR morphological dilation (aoflagger's
-    post-pass; :func:`sir_mask`) to the detected mask.
-    """
+def _baseline_island(vis: DataFrame, detect) -> DataFrame:
+    """The per-baseline (t, chan) image island every UDF flagger runs:
+    ONE ``groupBy(ant1, ant2).applyInPandas`` shuffle; per baseline the
+    rows' t/chan ranks place them on a dense grid, and
+    ``detect(pdf, grid, present, prior, chans)`` returns the grid's
+    mask. ``grid(values)`` scatters a per-row array onto a zero float64
+    image, ``present`` marks the cells holding a row, ``prior`` is the
+    input ``flag`` on the grid and ``chans`` the sorted channel values.
+    The mask ORs into ``flag`` (reference src/flags.rs:414-418); every
+    other column passes through."""
     cols = list(vis.columns)
-    schema = vis.schema
 
     def per_baseline(pdf: pd.DataFrame) -> pd.DataFrame:
         ts = np.sort(pdf["t"].unique())
@@ -117,27 +114,53 @@ def flag_rfi(vis: DataFrame, base_sensitivity: float = 6.0,
         # run's 43k-row groups that alone dominated the island's CPU
         rows = np.searchsorted(ts, pdf["t"].to_numpy())
         cs = np.searchsorted(chans, pdf["chan"].to_numpy())
-        img = np.zeros((len(ts), len(chans)), dtype=np.float64)
-        re = (pdf["xx_re"].to_numpy() + pdf["yy_re"].to_numpy()) / 2.0
-        im = (pdf["xx_im"].to_numpy() + pdf["yy_im"].to_numpy()) / 2.0
-        img[rows, cs] = np.hypot(re, im)
-        present = np.zeros(img.shape, dtype=bool)
+        shape = (len(ts), len(chans))
+
+        def grid(values: np.ndarray) -> np.ndarray:
+            img = np.zeros(shape, dtype=np.float64)
+            img[rows, cs] = values
+            return img
+
+        present = np.zeros(shape, dtype=bool)
         present[rows, cs] = True
-        prior = np.zeros(img.shape, dtype=bool)
-        prior[rows, cs] = pdf["flag"].to_numpy(dtype=bool)
-        mask = sumthreshold_mask(
-            img, base_sensitivity,
-            existing=prior if re_apply_existing else None,
-            valid=present)
-        if sir_eta is not None:
-            mask = sir_mask(mask, sir_eta)
+        flag = pdf["flag"].to_numpy(dtype=bool)
+        prior = np.zeros(shape, dtype=bool)
+        prior[rows, cs] = flag
+        mask = detect(pdf, grid, present, prior, chans)
         out = pdf.copy()
-        detected = mask[rows, cs]
-        out["flag"] = (pdf["flag"].to_numpy(dtype=bool) | detected) \
-            if re_apply_existing else detected
+        out["flag"] = flag | mask[rows, cs]
         return out[cols]
 
-    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline, schema=schema)
+    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline,
+                                                     schema=vis.schema)
+
+
+def _stokes_i_amp(pdf: pd.DataFrame) -> np.ndarray:
+    """Per-row Stokes-I amplitude ``|(xx + yy)| / 2``, summed in the
+    input columns' own dtype (a float32 fact stays float32 until the
+    grid widens it)."""
+    re = (pdf["xx_re"].to_numpy() + pdf["yy_re"].to_numpy()) / 2.0
+    im = (pdf["xx_im"].to_numpy() + pdf["yy_im"].to_numpy()) / 2.0
+    return np.hypot(re, im)
+
+
+def flag_rfi(vis: DataFrame, base_sensitivity: float = 6.0,
+             sir_eta: float | None = None) -> DataFrame:
+    """Detect RFI per baseline and OR it into ``flag``.
+
+    The per-baseline image is the Stokes-I amplitude
+    ``|(xx + yy)| / 2`` over (t, chan) — the same reduction AOFlagger's MWA
+    strategy feeds SumThreshold. Detection ORs with prior flags
+    (reference src/flags.rs:414-418).
+    ``sir_eta`` appends the SIR morphological dilation (aoflagger's
+    post-pass; :func:`sir_mask`) to the detected mask.
+    """
+    def detect(pdf, grid, present, prior, chans):
+        mask = sumthreshold_mask(grid(_stokes_i_amp(pdf)), base_sensitivity,
+                                 existing=prior, valid=present)
+        return mask if sir_eta is None else sir_mask(mask, sir_eta)
+
+    return _baseline_island(vis, detect)
 
 
 # ------------------------------------- iterative AOFlagger strategy ---
@@ -335,38 +358,16 @@ def aoflagger_strategy_mask(img: np.ndarray,
 
 def flag_rfi_strategy(vis: DataFrame, base_sensitivity: float = 6.0,
                       eta: float | None = 0.2) -> DataFrame:
-    """F9d as the 100 TB UDF island: per-baseline images via ONE
+    """F9d as the 100 TB UDF island: per-baseline Stokes-I images via ONE
     ``groupBy(ant1, ant2).applyInPandas`` shuffle (bucketing by baseline
     removes it), each image run through the iterative strategy
     (:func:`aoflagger_strategy_mask`); the mask ORs into ``flag``."""
-    cols = list(vis.columns)
-    schema = vis.schema
+    def detect(pdf, grid, present, prior, chans):
+        return aoflagger_strategy_mask(
+            grid(_stokes_i_amp(pdf)), base_sensitivity, existing=prior,
+            valid=present, eta=eta)
 
-    def per_baseline(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = np.sort(pdf["t"].unique())
-        chans = np.sort(pdf["chan"].unique())
-        # vectorized rank lookup (ts/chans are sorted unique): a dict
-        # .map here is a Python-level lookup PER CELL — at the scale
-        # run's 43k-row groups that alone dominated the island's CPU
-        rows = np.searchsorted(ts, pdf["t"].to_numpy())
-        cs = np.searchsorted(chans, pdf["chan"].to_numpy())
-        img = np.zeros((len(ts), len(chans)), dtype=np.float64)
-        re = (pdf["xx_re"].to_numpy() + pdf["yy_re"].to_numpy()) / 2.0
-        im = (pdf["xx_im"].to_numpy() + pdf["yy_im"].to_numpy()) / 2.0
-        img[rows, cs] = np.hypot(re, im)
-        present = np.zeros(img.shape, dtype=bool)
-        present[rows, cs] = True
-        prior = np.zeros(img.shape, dtype=bool)
-        prior[rows, cs] = pdf["flag"].to_numpy(dtype=bool)
-        mask = aoflagger_strategy_mask(
-            img, base_sensitivity, existing=prior, valid=present,
-            eta=eta)
-        out = pdf.copy()
-        out["flag"] = pdf["flag"].to_numpy(dtype=bool) | mask[rows, cs]
-        return out[cols]
-
-    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline,
-                                                     schema=schema)
+    return _baseline_island(vis, detect)
 
 
 # ------------------------------------------------- SIR morphology ---
@@ -1088,57 +1089,26 @@ MWA_FLOAT_KW = dict(rf=1, windows=AOF_WINDOWS_FULL, form="subst",
 
 
 def flag_rfi_mwa(vis: DataFrame, base_sensitivity: float = 6.0,
-                 eta: float | None = 0.2,
-                 impl: str = "float") -> DataFrame:
+                 eta: float | None = 0.2) -> DataFrame:
     """F9e as the 100 TB UDF island (same shape as
     :func:`flag_rfi_strategy`): per-baseline polarization images via ONE
     ``groupBy(ant1, ant2).applyInPandas`` shuffle, each run through the
-    mwa-default orchestration; the joined mask ORs into ``flag``.
+    AOFlagger-statistics float mode of the mwa-default orchestration
+    (:func:`mwa_strategy_mask_pols_float` with :data:`MWA_FLOAT_KW`);
+    the joined mask ORs into ``flag``. Measured at 0.9837 cell
+    agreement / 0.9195 recall against the reference's own cotter
+    mwa-default golden, with every disagreeing cell within 2x of the
+    decision threshold (tests/test_golden_mwa_flags.py). Each pol's
+    amplitude is taken in float64 whatever the input dtype. The
+    integer-tick twin :func:`mwa_strategy_mask_pols` hash-matches the
+    relational plan (rfi_sql.mwa_strategy_steps) and stays the tests'
+    reference."""
+    def detect(pdf, grid, present, prior, chans):
+        pol_imgs = {p: grid(np.hypot(
+            pdf[f"{p}_re"].to_numpy(dtype=np.float64),
+            pdf[f"{p}_im"].to_numpy(dtype=np.float64))) for p in MWA_POLS}
+        return mwa_strategy_mask_pols_float(
+            pol_imgs, base_sensitivity=base_sensitivity, existing=prior,
+            valid=present, eta=eta, chan_values=chans, **MWA_FLOAT_KW)
 
-    ``impl='float'`` (default, the CLI path) runs the
-    AOFlagger-statistics float mode (:func:`mwa_strategy_mask_pols_float`
-    with :data:`MWA_FLOAT_KW`) — measured at 0.9837 cell agreement /
-    0.9195 recall against the reference's own cotter mwa-default golden,
-    with every disagreeing cell within 2x of the decision threshold
-    (tests/test_golden_mwa_flags.py). ``impl='ticks'`` runs the
-    integer-tick twin that hash-matches the relational plan
-    (rfi_sql.mwa_strategy_steps)."""
-    cols = list(vis.columns)
-    schema = vis.schema
-
-    def per_baseline(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = np.sort(pdf["t"].unique())
-        chans = np.sort(pdf["chan"].unique())
-        # vectorized rank lookup (ts/chans are sorted unique): a dict
-        # .map here is a Python-level lookup PER CELL — at the scale
-        # run's 43k-row groups that alone dominated the island's CPU
-        rows = np.searchsorted(ts, pdf["t"].to_numpy())
-        cs = np.searchsorted(chans, pdf["chan"].to_numpy())
-        shape = (len(ts), len(chans))
-        pol_imgs = {}
-        for p in MWA_POLS:
-            re = pdf[f"{p}_re"].to_numpy(dtype=np.float64)
-            im = pdf[f"{p}_im"].to_numpy(dtype=np.float64)
-            img = np.zeros(shape, dtype=np.float64)
-            img[rows, cs] = np.hypot(re, im)
-            pol_imgs[p] = img
-        present = np.zeros(shape, dtype=bool)
-        present[rows, cs] = True
-        prior = np.zeros(shape, dtype=bool)
-        prior[rows, cs] = pdf["flag"].to_numpy(dtype=bool)
-        if impl == "float":
-            mask = mwa_strategy_mask_pols_float(
-                pol_imgs, base_sensitivity=base_sensitivity,
-                existing=prior, valid=present, eta=eta,
-                chan_values=chans, **MWA_FLOAT_KW)
-        else:
-            mask = mwa_strategy_mask_pols(
-                pol_imgs, base_sensitivity=base_sensitivity,
-                existing=prior, valid=present, eta=eta,
-                chan_values=chans)
-        out = pdf.copy()
-        out["flag"] = pdf["flag"].to_numpy(dtype=bool) | mask[rows, cs]
-        return out[cols]
-
-    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline,
-                                                     schema=schema)
+    return _baseline_island(vis, detect)

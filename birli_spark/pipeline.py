@@ -26,15 +26,15 @@ def fanout_materialize(df: DataFrame, big: bool = False) -> DataFrame:
     once per action instead of once per consumer (guide §5).
 
     The spelling follows the materialization's SIZE, which the caller
-    knows (``big``); SPARK_GRAFT_FANOUT_PERSIST forces one globally.
+    knows (``big``):
 
-    - small (``local``): ``localCheckpoint`` — deserialized blocks on
-      the executors, no serialize/file round trip; measured fastest on
+    - small: ``localCheckpoint`` — deserialized blocks on the
+      executors, no serialize/file round trip; measured fastest on
       sf-sized facts (s1h 7.9 s vs 10.5-10.9 s under the file-backed
       spellings; x1/x4 e2e probes 4.8/6.1 s vs 5.5/23 s). An executor
       loss forfeits blocks and lineage — acceptable only because these
       facts are small enough to recompute by re-running the query.
-    - big (``reliable``): ``checkpoint`` into the job's checkpoint dir
+    - big: reliable ``checkpoint`` into the job's checkpoint dir
       (SPARK_GRAFT_CHECKPOINT_DIR, default under the local tmpdir;
       point it at durable shared storage on a cluster) — survives
       executor loss without recompute, and on the 13M-row x16 e2e
@@ -42,33 +42,25 @@ def fanout_materialize(df: DataFrame, big: bool = False) -> DataFrame:
       blocks (17-33 s vs 27-77 s wall across box states: the
       block-manager heap residency pays this host's page-fault tax,
       files + page cache do not). This is the 100 TB spelling.
-    - ``disk``: ``persist(DISK_ONLY)`` — lineage survives executor
-      loss (lost blocks recompute); kept for comparison: the
-      InMemoryRelation columnar encode + per-consumer decode made it
-      the slowest measured spelling at every size (x16 71 s).
+
+    ``persist(DISK_ONLY)`` was measured too and lost at every size
+    (x16 71 s): the InMemoryRelation columnar encode + per-consumer
+    decode costs more than either checkpoint.
     """
+    if not big:
+        return df.localCheckpoint(eager=False)
     import os
     import tempfile
 
-    mode = os.environ.get("SPARK_GRAFT_FANOUT_PERSIST") or (
-        "reliable" if big else "local")
-    if mode == "disk":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.DISK_ONLY)
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(os.environ.get(
-                "SPARK_GRAFT_CHECKPOINT_DIR",
-                os.path.join(tempfile.gettempdir(),
-                             "birli_spark_ckpt")))
-        # eager: ONE compute writes the checkpoint files and every
-        # consumer (including the first) reads them back; lazy would
-        # compute once for the first consumer job and once more for
-        # the checkpoint writer
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=False)
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(os.environ.get(
+            "SPARK_GRAFT_CHECKPOINT_DIR",
+            os.path.join(tempfile.gettempdir(), "birli_spark_ckpt")))
+    # eager: ONE compute writes the checkpoint files and every consumer
+    # (including the first) reads them back; lazy would compute once
+    # for the first consumer job and once more for the checkpoint writer
+    return df.checkpoint(eager=True)
 
 
 #: pipeline defaults used by the flagship query, bench, and the oracle
@@ -132,7 +124,7 @@ def preprocess_baked(spark: SparkSession, sf_dir: str,
         # The corrected fact feeds TWO consumers (the SSINS mask
         # derivation and the join-back probe): materialize it once so
         # the trig-heavy corrections chain doesn't execute twice per
-        # action (see fanout_materialize for the deployment-selected
+        # action (see fanout_materialize for the size-selected
         # spelling). Rows unchanged — plan shape only.
         from birli_spark.operators import ssins
 

@@ -152,12 +152,12 @@ def e2e_rows(spark: SparkSession, write_path: str | None = None,
     # scan Spark can neither column-prune nor share, so every action
     # paid THREE full archive decodes (guide §5: persist at the
     # fan-out). Rows are unchanged; only the plan shape is. The
-    # materialization spelling (localCheckpoint vs lineage-keeping
-    # persist vs reliable checkpoint) is deployment-selected — see
-    # pipeline.fanout_materialize. Lazy either way: the first action
-    # computes each partition once and every other consumer reads the
-    # stored block (bench timing still covers the materialization —
-    # the noop action runs inside the timer).
+    # materialization spelling (localCheckpoint vs reliable checkpoint)
+    # is size-selected — see pipeline.fanout_materialize. Lazy for
+    # localCheckpoint: the first action computes each partition once
+    # and every other consumer reads the stored block (bench timing
+    # still covers the materialization — the noop action runs inside
+    # the timer).
     from birli_spark.pipeline import fanout_materialize
     # big above ~4M rows: the x4 probe (3.3M) still favors executor
     # blocks (6.0-7.3 s vs 7.7-8.2 s), the x16 one (13.4M) clearly

@@ -126,12 +126,8 @@ def freq_expr(meta: ObsMeta) -> str:
 def detect_format(gpubox_glob: str) -> str:
     """'mwax' (..._chNNN_BBB.fits), 'legacy' (..._gpuboxNN_BB.fits) or
     'synthetic' (this repo's teaching format) by filename shape."""
-    import glob as _glob
     import re as _re
-    paths = sorted(_glob.glob(gpubox_glob))
-    if not paths:
-        raise FileNotFoundError(f"no gpubox files match {gpubox_glob!r}")
-    name = paths[0]
+    name = gpubox.resolve_paths(gpubox_glob)[0]
     if _re.search(r"_ch\d+_\d+\.fits$", name):
         return "mwax"
     if _re.search(r"gpubox\d+_\d+\.fits$", name):
@@ -196,13 +192,11 @@ def gpubox_header_meta(gpubox_glob: str) -> dict:
     this is one metadata pass, same as the reference's context
     construction. ``bscale`` is the scan-image BSCALE (the reference's
     Van Vleck scale multiplies by it, src/van_vleck.rs:318-329)."""
-    import glob as _glob
-
     from birli_spark.sources import fitscore as fc
     min_ms = None
     max_ms = None
     bscale = None
-    for path in sorted(_glob.glob(gpubox_glob)):
+    for path in gpubox.resolve_paths(gpubox_glob):
         with open(path, "rb") as f:
             raw = f.read(fc.BLOCK)
             # walk header-by-header: parse each header unit (possibly
@@ -528,37 +522,9 @@ def build_baked_real(spark: SparkSession, ctx, metafits_path: str,
             slim = vis.select(
                 "t", "chan", "ant1", "ant2", "bl", "flag",
                 *[F.col(c).cast("float").alias(c) for c in VIS_COLS])
-            # Scale lever (r9, VERDICT r8 item 2): stage the slim
-            # corrected fact as a parquet table BUCKETED by the
-            # island's grouping keys and run the island over the
-            # staged table — the groupBy(ant1, ant2) applyInPandas
-            # exchange disappears (tests/test_bucketing.py pins the
-            # plan shape). The trade is a bucketed write+scan of the
-            # slim fact instead of a full shuffle of it: the right
-            # shape on a network-bound cluster — the bucketed write
-            # needs NO shuffle (each decode task streams rows into its
-            # bucket files), the island reads each bucket locally, and
-            # any RERUN (new thresholds, new strategy) starts from the
-            # staged layout without re-decoding the archive. Off by
-            # default in local mode, where a shuffle is a tmpfs memcpy
-            # and the parquet encode would be pure overhead:
-            # SPARK_GRAFT_BUCKETED_FACT=1 enables with
-            # spark.sql.shuffle.partitions buckets, =N picks N.
-            import os as _os
-            nb_env = _os.environ.get("SPARK_GRAFT_BUCKETED_FACT", "0")
-            if nb_env != "0":
-                n_buckets = (int(nb_env) if int(nb_env) > 1 else int(
-                    spark.conf.get("spark.sql.shuffle.partitions")))
-                spark.sql("DROP TABLE IF EXISTS birli_fact_staged")
-                (slim.write.mode("overwrite")
-                     .bucketBy(n_buckets, "ant1", "ant2")
-                     .sortBy("ant1", "ant2")
-                     .saveAsTable("birli_fact_staged"))
-                slim = spark.table("birli_fact_staged")
             flagged = rfi.flag_rfi_mwa(
                 slim, base_sensitivity=ctx.rfi_sensitivity,
-                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2,
-                impl=ctx.rfi_impl)
+                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2)
             nf = meta.n_fine_per_coarse
             ts = (f"CAST({meta.gps_start + anchor['offset_s']!r}"
                   f" AS DOUBLE)"

@@ -5,6 +5,19 @@ Arrow for pandas UDFs, UTC session timezone for oracle comparability) are
 what we would set on a real cluster. `spark.sql.shuffle.partitions` is set
 to the local core count — on a 1000-executor cluster this would be tuned to
 ~2-3x total cores or left to AQE's coalescing.
+
+Every ``SPARK_GRAFT_*`` environment variable the package reads
+(tests/test_session_knobs.py fails when the code and this table differ):
+
+==============================  ===============================================  ==============================  ====================================
+name                            sets                                             default                         set by
+==============================  ===============================================  ==============================  ====================================
+SPARK_GRAFT_CPUS                local[N] cores                                   os.cpu_count()                  bench.py runs, the Tier-1 command
+SPARK_GRAFT_LOCAL_DIR           spark.local.dir                                  /dev/shm when present           perfbench/run.py, tools/scale_e2e.py
+SPARK_GRAFT_SHUFFLE_PARTITIONS  spark.sql.shuffle.partitions                     the core count                  tools/shuffle_realism.py
+SPARK_GRAFT_WAREHOUSE_DIR       spark.sql.warehouse.dir                          $TMPDIR/birli_spark_warehouse   perfbench/run.py
+SPARK_GRAFT_CHECKPOINT_DIR      pipeline.fanout_materialize(big) checkpoint dir  $TMPDIR/birli_spark_ckpt        perfbench/run.py
+==============================  ===============================================  ==============================  ====================================
 """
 
 from __future__ import annotations
@@ -76,17 +89,12 @@ def get_spark(app_name: str = "birli_spark", cpus: int | None = None,
         # planner relaxation — results unchanged. Safe here because the
         # shared subset keys are high-cardinality (baselines), so
         # subset co-partitioning cannot concentrate a join onto few
-        # partitions; flip SPARK_GRAFT_REQUIRE_ALL_CLUSTER_KEYS=1 to
-        # restore the default on a cluster where a skewed-subset join
-        # ever appears.
-        .config("spark.sql.requireAllClusterKeysForCoPartition",
-                os.environ.get("SPARK_GRAFT_REQUIRE_ALL_CLUSTER_KEYS",
-                               "0") == "1" and "true" or "false")
-        # warehouse for staged bucketed tables (the CLI's
-        # SPARK_GRAFT_BUCKETED_FACT fact staging, real_input.py; the
-        # bucketing tests): a tmp path, never the caller's cwd — a
-        # scale run would otherwise drop a fact-sized spark-warehouse
-        # into the repo checkout
+        # partitions; pass extra_conf to restore the default on a
+        # cluster where a skewed-subset join ever appears.
+        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        # warehouse for saveAsTable (the bucketing tests): a tmp path,
+        # never the caller's cwd — a scale run would otherwise drop a
+        # fact-sized spark-warehouse into the repo checkout
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR") or os.path.join(
                     __import__("tempfile").gettempdir(),
@@ -125,10 +133,9 @@ def _tune_malloc() -> None:
     to the OS — the right trade on any long-lived reused worker
     (spark.python.worker.reuse is Spark's default), not just here.
     Exported to the child tree (JVM -> Python workers) before the JVM
-    launches, and applied to the current process via mallopt.
-    Set SPARK_GRAFT_MALLOC_TUNE=0 to disable."""
+    launches, and applied to the current process via mallopt."""
     global _MALLOC_TUNED
-    if _MALLOC_TUNED or os.environ.get("SPARK_GRAFT_MALLOC_TUNE") == "0":
+    if _MALLOC_TUNED:
         return
     _MALLOC_TUNED = True
     os.environ.setdefault("MALLOC_MMAP_MAX_", "0")

@@ -143,16 +143,17 @@ def read_gpubox(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed gpubox scan: one task per file (= coarse channel),
     like the reference's per-coarse-channel parallel read. Ships file
     PATHS to the workers (see :func:`scan_paths_df`) — each Python
-    worker mmap-reads its own file, so archive bytes never transit the
-    JVM (the round-8 fix the MWAX/legacy readers already carry: the
-    ``binaryFile`` route serialized every byte through executor threads
-    and an Arrow transfer before the parse even started)."""
+    worker reads its own file in one buffered read, so archive bytes
+    never transit the JVM (the round-8 fix the MWAX/legacy readers
+    already carry: the ``binaryFile`` route serialized every byte
+    through executor threads and an Arrow transfer before the parse
+    even started)."""
     files = scan_paths_df(spark, path_glob)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path in pdf["path"]:
-                out = parse_gpubox_bytes(_mmap_bytes(str(path)))
+                out = parse_gpubox_bytes(_read_file_bytes(str(path)))
                 if len(out):
                     yield out
 
@@ -204,12 +205,7 @@ try:
                 raise ValueError("gpubox source requires a path")
 
         def partitions(self):
-            import glob as globmod
-            files = sorted(globmod.glob(self._path))
-            if not files:
-                raise FileNotFoundError(
-                    f"no gpubox files match {self._path}")
-            return [InputPartition(f) for f in files]
+            return [InputPartition(f) for f in resolve_paths(self._path)]
 
         def read(self, partition):
             import pyarrow as pa
@@ -355,12 +351,38 @@ def _recv_channel_of(path: str) -> int:
     return int(m.group(1))
 
 
+def resolve_paths(path_glob: str) -> list[str]:
+    """The sorted local files a driver-side ``path_glob`` matches — the
+    one resolver behind every gpubox scan and header walk. A ``file:``
+    scheme is stripped; any other scheme (s3://, hdfs://) raises
+    ``ValueError``, because the scans ``open()`` mounted POSIX paths;
+    no match raises ``FileNotFoundError``."""
+    import glob
+    import re
+
+    if path_glob.startswith("file:"):
+        path_glob = re.sub(r"^file:(//(localhost)?)?", "", path_glob)
+    else:
+        m = re.match(r"([A-Za-z][A-Za-z0-9+.-]+)://", path_glob)
+        if m:
+            raise ValueError(
+                f"{m.group(1)}:// is not a mounted filesystem "
+                f"({path_glob!r}): gpubox scans open POSIX paths — read "
+                f"{m.group(1)}:// objects with "
+                f"spark.read.format(\"binaryFile\")")
+    paths = sorted(glob.glob(path_glob))
+    if not paths:
+        raise FileNotFoundError(f"no files match {path_glob!r}")
+    return paths
+
+
 def scan_paths_df(spark: SparkSession, path_glob: str) -> DataFrame:
     """One row per matched archive file, one partition per file — the
     whole-file task split of the ``binaryFile`` source WITHOUT moving
-    the bytes through the JVM. Each Python worker mmap-reads its own
-    file from shared storage (page-cache backed, zero-copy until
-    touched), so the JVM never holds archive bytes at all.
+    the bytes through the JVM. Each Python worker reads its own file
+    from shared storage in one buffered read
+    (:func:`_read_file_bytes`), so the JVM never holds archive bytes at
+    all.
 
     Motivation (round-8 scale run): at 24 concurrent ~340 MB files the
     binaryFile route collapsed into JVM-side lock contention — executor
@@ -372,23 +394,18 @@ def scan_paths_df(spark: SparkSession, path_glob: str) -> DataFrame:
 
     Requirement: ``path_glob`` must name a POSIX path visible on every
     worker (local disk in local mode, or a shared/distributed
-    filesystem mounted identically cluster-wide). Object-store URIs
-    (s3://, hdfs://) are not handled here — use ``spark.read.format(
-    "binaryFile")`` for those schemes; driver-side ``glob.glob`` and
-    worker-side ``open()`` both assume a mounted filesystem."""
-    import glob as _g
-
+    filesystem mounted identically cluster-wide); :func:`resolve_paths`
+    rejects object-store URIs (s3://, hdfs://) — use ``spark.read.
+    format("binaryFile")`` for those schemes."""
     from birli_spark.sources.metafits import values_df
-    paths = sorted(_g.glob(path_glob))
-    if not paths:
-        raise FileNotFoundError(f"no files match {path_glob!r}")
+    paths = resolve_paths(path_glob)
     df = values_df(spark, [(p,) for p in paths], "path string")
     return df.repartition(len(paths))
 
 
-def _mmap_bytes(path: str) -> bytes:
+def _read_file_bytes(path: str) -> bytes:
     """Read an archive file with ONE large sequential read into the
-    process heap (name kept from the round-8 mmap spelling).
+    process heap.
 
     Deliberately NOT mmap: a fresh per-file mapping takes a minor
     fault on every 4 KiB page at first touch, and N workers faulting
@@ -399,8 +416,7 @@ def _mmap_bytes(path: str) -> bytes:
     malloc tuning (session._tune_malloc: MALLOC_MMAP_MAX_=0, no trim)
     keeps mapped, so each long-lived reused worker faults its
     high-water mark once and recycles the same pages for every
-    subsequent file. Also closes the round-8 ADVICE note about the
-    never-closed mmap handle: plain bytes, no handle to leak."""
+    subsequent file."""
     with open(path, "rb") as f:
         return f.read()
 
@@ -416,7 +432,7 @@ def read_mwax_gpubox(spark: SparkSession, path_glob: str) -> DataFrame:
         for pdf in batches:
             for path in pdf["path"]:
                 out = parse_mwax_gpubox_bytes(
-                    _mmap_bytes(str(path)), _recv_channel_of(str(path)))
+                    _read_file_bytes(str(path)), _recv_channel_of(str(path)))
                 if len(out):
                     yield out
 

@@ -213,7 +213,7 @@ def read_legacy_gpubox(spark: SparkSession, path_glob: str,
     n_fine = ctx["n_fine_per_coarse"]
     order = sky_channel_order(ctx["coarse_channels"])
     sky_of_gpubox = {gi + 1: si for si, gi in enumerate(order)}
-    from birli_spark.sources.gpubox import _mmap_bytes, scan_paths_df
+    from birli_spark.sources.gpubox import _read_file_bytes, scan_paths_df
     files = scan_paths_df(spark, path_glob)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -228,7 +228,7 @@ def read_legacy_gpubox(spark: SparkSession, path_glob: str,
                 gp = int(m.group(1))
                 sky_cc = sky_of_gpubox[gp]
                 for unix_ms, tiles in iter_legacy_scans(
-                        _mmap_bytes(str(path))):
+                        _read_file_bytes(str(path))):
                     # one frame per scan (all fine chans tiled), not one
                     # per (scan, chan): a 128-fine-chan obs would
                     # otherwise pay Arrow batch overhead 128x per scan

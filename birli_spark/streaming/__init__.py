@@ -7,6 +7,10 @@ memory sink; the driver hash-gates the result against the batch twin.
 
 from pyspark.sql import DataFrame
 
+#: shuffle partitions (= state-store instances) a stream starts with;
+#: see :func:`state_partitions_scope`
+STREAM_PARTITIONS = 8
+
 
 def state_partitions_scope(spark):
     """Context manager: pin ``spark.sql.shuffle.partitions`` to the
@@ -23,17 +27,16 @@ def state_partitions_scope(spark):
     24.4 s at 32 partitions vs 14.0/15.9/11.4 s at 16/8/4 — so size
     the count by STATE VOLUME, not core count. These finite-feed
     harnesses carry <1 MB of state (hundreds-to-thousands of keys):
-    local default 8. Real deployments size by keys x bytes per key /
-    target state per store via SPARK_GRAFT_STREAM_PARTITIONS.
+    :data:`STREAM_PARTITIONS` = 8. Real deployments size it by keys x
+    bytes per key / target state per store.
     """
-    import os
     from contextlib import contextmanager
 
     @contextmanager
     def scope():
-        n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
         old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n)
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(STREAM_PARTITIONS))
         try:
             yield
         finally:

@@ -398,7 +398,7 @@ def test_cli_surface_covers_every_reference_option():
     """CLI-surface completeness: every long option the reference's
     parser defines (src/cli.rs:636-812) parses here too — a user can
     paste a reference invocation (plus the input-shape flags) and run
-    it. Extras (--ssins, --rfi-impl, --dump-csv, --flag-parquet, ...)
+    it. Extras (--ssins, --sir-eta, --dump-csv, --flag-parquet, ...)
     are beyond-reference additions, allowed to be ours-only."""
     p = cli.build_parser()
     ours = {o[2:] for a in p._actions

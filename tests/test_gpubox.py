@@ -115,3 +115,30 @@ def test_mwax_rejects_legacy(spark):
         gpubox.parse_mwax_gpubox_bytes(
             b"SIMPLE  =                    T" + b" " * 50 + b"END" + b" " * 77
             + b" " * (2880 - 160), 117)
+
+
+def test_path_resolver_driver_side(gpubox_dir, tmp_path):
+    """One resolver behind scan_paths_df, detect_format and
+    gpubox_header_meta: ``file:`` URIs resolve like plain paths, other
+    schemes fail loudly (not as an empty scan), no match is
+    FileNotFoundError. Driver-only: every case resolves or raises
+    before a Spark job exists, so ``spark=None`` is never touched."""
+    import pytest
+
+    from birli_spark import real_input
+    plain = gpubox_dir + "/*.fits"
+    want = gpubox.resolve_paths(plain)
+    assert len(want) == N_CC and want == sorted(want)
+    for uri in ("file:" + plain, "file://" + plain,
+                "file://localhost" + plain):
+        assert gpubox.resolve_paths(uri) == want
+        assert real_input.detect_format(uri) == "synthetic"
+    callers = (lambda g: gpubox.scan_paths_df(None, g),
+               real_input.detect_format,
+               real_input.gpubox_header_meta)
+    for call in callers:
+        with pytest.raises(ValueError,
+                           match=r"s3://.*binaryFile"):
+            call("s3://bucket/obs/*.fits")
+        with pytest.raises(FileNotFoundError, match="no files match"):
+            call(str(tmp_path / "absent_*.fits"))

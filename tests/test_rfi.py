@@ -5,9 +5,16 @@ baseline's image is flagged there and nowhere else."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
+from birli_spark import pipeline
+from birli_spark.functions.complex import VIS_COLS
+from birli_spark.operators import rfi, rfi_sql
 from birli_spark.operators.rfi import flag_rfi, sumthreshold_mask
+from birli_spark.sources import synthetic as syn
 
 
 def test_single_spike_mask():
@@ -88,8 +95,8 @@ def test_spark_operator_minimal(spark):
 
 
 def test_existing_flags_preserved(spark):
-    """re_apply_existing=True ORs detection with prior flags
-    (src/flags.rs:414-418)."""
+    """Detection ORs with prior flags (the reference's
+    re_apply_existing, src/flags.rs:414-418)."""
     rows = [Row(t=t, ant1=0, ant2=1, chan=c,
                 xx_re=1.0, xx_im=0.0, xy_re=0.0, xy_im=0.0,
                 yx_re=0.0, yx_im=0.0, yy_re=1.0, yy_im=0.0,
@@ -98,3 +105,84 @@ def test_existing_flags_preserved(spark):
     vis = spark.createDataFrame(rows)
     out = flag_rfi(vis).toPandas()
     assert out[(out.t == 0) & (out.chan == 0)]["flag"].all()
+
+
+# ---------------------------------------------- island equivalence ---
+
+def _stokes_i_rows(g):
+    """Stokes-I amplitude per row, summed in the columns' own dtype."""
+    re = (g["xx_re"].to_numpy() + g["yy_re"].to_numpy()) / 2.0
+    im = (g["xx_im"].to_numpy() + g["yy_im"].to_numpy()) / 2.0
+    return np.hypot(re, im)
+
+
+def _ref_flag_rfi(grid, present, prior, chans):
+    return rfi.sumthreshold_mask(grid(_stokes_i_rows), 6.0,
+                                 existing=prior, valid=present)
+
+
+def _ref_flag_rfi_strategy(grid, present, prior, chans):
+    return rfi.aoflagger_strategy_mask(grid(_stokes_i_rows), 6.0,
+                                       existing=prior, valid=present,
+                                       eta=0.2)
+
+
+def _ref_flag_rfi_mwa(grid, present, prior, chans):
+    imgs = {p: grid(lambda g, p=p: np.hypot(
+        g[f"{p}_re"].to_numpy(dtype=np.float64),
+        g[f"{p}_im"].to_numpy(dtype=np.float64))) for p in rfi.MWA_POLS}
+    return rfi.mwa_strategy_mask_pols_float(
+        imgs, existing=prior, valid=present, eta=0.2, chan_values=chans,
+        **rfi.MWA_FLOAT_KW)
+
+
+@pytest.fixture(scope="module")
+def rule_flagged_cells(spark, sf_dir):
+    """The sf0.001 rule-flagged fact, one row per (bl, t, chan) — the
+    f9 queries' shared input (__spark_entry__._rfi_cell_view)."""
+    vis = pipeline.rule_flags(spark, syn.load_vis(spark, sf_dir))
+    vis.createOrReplaceTempView("t_island_flagged")
+    return spark.sql(rfi_sql.cell_dedup_select(
+        "t_island_flagged", tuple(vis.columns))).localCheckpoint(eager=True)
+
+
+_REFERENCE_MASKS = {"flag_rfi": _ref_flag_rfi,
+                    "flag_rfi_strategy": _ref_flag_rfi_strategy,
+                    "flag_rfi_mwa": _ref_flag_rfi_mwa}
+
+
+@pytest.mark.parametrize("dtype", ["double", "float"])
+@pytest.mark.parametrize("island", sorted(_REFERENCE_MASKS))
+def test_island_matches_driver_side_mask(spark, rule_flagged_cells,
+                                         island, dtype):
+    """Each Spark island's output flag equals its numpy mask function
+    run driver-side on the same dense (t, chan) grid, ORed with the
+    prior flag — per baseline, every row, other columns untouched. The
+    grid here is a pandas pivot (absent cells NaN), independent of the
+    island's rank scatter; ``float`` runs the CLI's f32 payload."""
+    cells = rule_flagged_cells.select(*[
+        F.col(c).cast(dtype).alias(c) if c in VIS_COLS else c
+        for c in rule_flagged_cells.columns])
+    key = ["ant1", "ant2", "t", "chan"]
+    src = cells.toPandas().sort_values(key).reset_index(drop=True)
+    out = (getattr(rfi, island)(cells).toPandas()
+           .sort_values(key).reset_index(drop=True))
+    assert len(out) == len(src) > 0
+    pd.testing.assert_frame_equal(out.drop(columns="flag"),
+                                  src.drop(columns="flag"))
+    want = []
+    for _, g in src.groupby(["ant1", "ant2"], sort=True):
+        def grid(rowfn, g=g):
+            vals = g.assign(v=rowfn(g)).pivot(index="t", columns="chan",
+                                               values="v")
+            return vals.to_numpy(dtype=np.float64, na_value=0.0)
+
+        cube = g.pivot(index="t", columns="chan", values="flag")
+        present = cube.notna().to_numpy()
+        prior = cube.eq(True).to_numpy()
+        mask = _REFERENCE_MASKS[island](grid, present, prior,
+                                        cube.columns.to_numpy())
+        ti = cube.index.get_indexer(g["t"])
+        ci = cube.columns.get_indexer(g["chan"])
+        want.append(g["flag"].to_numpy(dtype=bool) | mask[ti, ci])
+    assert (out["flag"].to_numpy() == np.concatenate(want)).all()
